@@ -1,11 +1,18 @@
-"""Single-process chunker mirror of pipeline.chunk_spans (frozen spec v2).
+"""The chunker (frozen spec v2): :class:`ChunkPacker` plus its
+single-process oracle :func:`chunk_document`.
 
 Reference semantics: HybridChunker walks the doc tree in reading order with
 heading context, packs items into <=512-token chunks, and merges undersized
 *adjacent* peers sharing headings (reference src/ingestion/chunker.py:16-27,
 max_tokens src/config.py:34). Re-specified here as a deterministic
-single-pass greedy packer; the Spark kernel (pipeline._chunk_kernel) and
-this oracle share :class:`ChunkPacker`, and tests assert equality.
+single-pass greedy packer. :class:`ChunkPacker` is the one definition every
+context runs:
+- the narrow extraction kernel (pipeline._extract_doc_kernel) feeds it each
+  whole document's ordered blocks in the same pass that extracts them;
+- the spread path's chunk_spans (pipeline._chunk_kernel) feeds it ordered
+  span rows after a doc_id shuffle, streaming across Arrow batches;
+- :func:`chunk_document` feeds it one oracle-extracted document.
+Tests assert all three agree.
 
 Frozen spec v2:
 - chunkable spans: kind in {heading, text, table} with non-empty text,
@@ -94,7 +101,7 @@ def chunk_document(
     max_tokens: int = MAX_TOKENS,
 ) -> list[dict]:
     """spans: [(order, kind, text, media_ref, page_num)] (any order; sorted
-    by `order` here) → chunk dicts matching pipeline.chunk_spans columns."""
+    by `order` here) → chunk dicts matching the pipeline's chunks columns."""
     packer = ChunkPacker(max_tokens)
     for order, kind, text, _ref, page in sorted(spans, key=lambda s: s[0]):
         packer.add(kind, text, page)

@@ -5,19 +5,23 @@ Replaces the reference's single-process orchestration
 embed → insert) with one declarative DataFrame DAG, in two interchangeable
 physical shapes (identical output, tested):
 
-NARROW (default — zero shuffles for extraction + lineage):
+NARROW (default — zero shuffles for extraction, chunking and lineage):
     read input table
       → [resume anti-join on lineage]             (E16, postgres.py:253-262)
       → mapInPandas(whole-doc kernel)             (Arrow-vectorized; ordering
-         computed in-kernel; per-doc lineage sentinel rows)
-      → chunk assembly: running-token-sum window → segment → groupBy
-         (reference HybridChunker analog, src/ingestion/chunker.py:45-55)
+         computed in-kernel; the ordered blocks feed the shared ChunkPacker
+         in the same pass — reference HybridChunker analog,
+         src/ingestion/chunker.py:45-55)
+      → one output of span, chunk and per-doc lineage rows, told apart by
+        an out-of-band row_type column; each table is a filter of it
 
 SPREAD (giant-document skew defuse — the north-rule salting path):
     … → posexplode(spans) → round-robin repartition (one doc's 10^4 spans
     become 10^4 rows spread over all tasks) → mapInPandas(per-span kernel)
     → window row_number over (doc_id | offset, span_idx, block_seq)
-    → same chunk assembly
+    → chunk_spans: doc_id shuffle + sort → mapInPandas(the same ChunkPacker)
+      (a doc's spans are split across tasks here, so chunking needs them
+      brought back together)
 
 Scale notes (100 TB):
 - Extraction is embarrassingly parallel per document → narrow is default;
@@ -26,6 +30,8 @@ Scale notes (100 TB):
   Pick spread only when single documents are large enough to straggle a
   task (SURVEY.md §7.3 #3).
 - Everything after the kernels is pure relational (whole-stage codegen).
+  With the narrow kernel output persisted, extract_job's four tables
+  (spans, chunks, doc_metadata, lineage) all come from one kernel pass.
 - See BENCH.md "What made it scale" for the measured pitfalls (task.cpus,
   many-file input, self-referencing-join kernel re-execution).
 """
@@ -173,41 +179,54 @@ def extract_blocks(
 
 
 # --------------------------------------------------------------------------
-# narrow path: whole-document kernel (zero-shuffle extraction)
+# narrow path: whole-document kernel (zero-shuffle extraction + chunking)
 # --------------------------------------------------------------------------
+# row_type of the narrow kernel's output rows. The role of a row travels in
+# its own column, never in `kind`: an input span may carry any kind string,
+# and extract_span passes unknown media kinds through unchanged.
+SPAN_ROW, CHUNK_ROW, DOC_ROW = 0, 1, 2
+
 _NARROW_SCHEMA = (
-    "doc_id string, order int, kind string, text string, media_ref string, "
-    "page_num int, error string, n_spans_in long, partition_id int"
+    "row_type tinyint, doc_id string, order int, kind string, text string, "
+    "media_ref string, page_num int, n_tokens int, error string, "
+    "n_spans_in long, partition_id int"
 )
 
 
 def _extract_doc_kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-    """Whole-document extraction: one input row (doc_id, spans[]) → ordered
-    span rows, order computed in-kernel (the oracle logic itself — equality
-    with the single-process oracle holds by construction).
+    """Whole-document extraction: one input row (doc_id, spans[]) → the
+    document's ordered span rows, its chunk rows and one lineage row, told
+    apart by ``row_type``. Order is computed in-kernel (the oracle logic
+    itself — equality with the single-process oracle holds by construction),
+    and the document's blocks feed the shared ChunkPacker in that order, so
+    chunking needs no shuffle and no second Python pass.
 
-    Emits one sentinel row per document (kind='__doc') carrying lineage:
-    error, n_spans_in, n_blocks_out (in `order`). Failed docs emit ONLY the
-    sentinel (no partial output).
+    SPAN_ROW: (order, kind, text, media_ref, page_num) of one block.
+    CHUNK_ROW: order = chunk_index; text, page_num, n_tokens of one chunk.
+    DOC_ROW: lineage — error, n_spans_in, n_blocks_out (in `order`).
+    Failed docs emit ONLY the DOC_ROW (no partial output).
     """
     import pandas as pd
     from pyspark import TaskContext
 
+    from .kernels.chunker import ChunkPacker
     from .kernels.extract import extract_span
 
     pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-    cols = ("doc_id", "order", "kind", "text", "media_ref", "page_num",
-            "error", "n_spans_in", "partition_id")
+    cols = ("row_type", "doc_id", "order", "kind", "text", "media_ref",
+            "page_num", "n_tokens", "error", "n_spans_in", "partition_id")
     for pdf in batches:
         out: dict[str, list] = {k: [] for k in cols}
 
-        def emit(doc_id, order, kind, text, ref, page, err, n_in):
+        def emit(row_type, doc_id, order, kind, text, ref, page, n_tok, err, n_in):
+            out["row_type"].append(row_type)
             out["doc_id"].append(doc_id)
             out["order"].append(order)
             out["kind"].append(kind)
             out["text"].append(text)
             out["media_ref"].append(ref)
             out["page_num"].append(page)
+            out["n_tokens"].append(n_tok)
             out["error"].append(err)
             out["n_spans_in"].append(n_in)
             out["partition_id"].append(pid)
@@ -237,20 +256,26 @@ def _extract_doc_kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataF
             except Exception:
                 err = traceback.format_exc(limit=2)
             if err is None:
+                packer = ChunkPacker(MAX_TOKENS)
                 for order, (kind, text, ref, page) in enumerate(blocks):
-                    emit(doc_id, order, kind, text, ref, page, None, n_in)
-                emit(doc_id, len(blocks), "__doc", None, None, None, None, n_in)
+                    emit(SPAN_ROW, doc_id, order, kind, text, ref, page, None, None, n_in)
+                    packer.add(kind, text, page)
+                for c in packer.finish():
+                    emit(CHUNK_ROW, doc_id, c["chunk_index"], None, c["text"], None,
+                         c["page_num"], c["n_tokens"], None, n_in)
+                emit(DOC_ROW, doc_id, len(blocks), None, None, None, None, None, None, n_in)
             else:
-                emit(doc_id, 0, "__doc", None, None, None, err, n_in)
+                emit(DOC_ROW, doc_id, 0, None, None, None, None, None, err, n_in)
         yield pd.DataFrame(out)
 
 
 def extract_documents_narrow(docs: DataFrame) -> DataFrame:
-    """Zero-shuffle extraction over whole-document rows. The default path:
-    extraction is embarrassingly parallel per document, so shuffling raw
-    payload bytes (spread path) is pure overhead unless the input files are
-    few/skewed. A giant document is one task's straggler here — switch to
-    the spread path when that dominates (SURVEY.md §7.3 #3)."""
+    """Zero-shuffle extraction and chunking over whole-document rows (the
+    kernel's raw output: span, chunk and lineage rows by ``row_type``). The
+    default path: extraction is embarrassingly parallel per document, so
+    shuffling raw payload bytes (spread path) is pure overhead unless the
+    input files are few/skewed. A giant document is one task's straggler
+    here — switch to the spread path when that dominates (SURVEY.md §7.3 #3)."""
     return docs.mapInPandas(_extract_doc_kernel, schema=_NARROW_SCHEMA)
 
 
@@ -287,13 +312,15 @@ def order_spans(blocks: DataFrame, drop_failed_docs: bool = True) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# stage 4: chunk assembly (heading-aware greedy packing — frozen spec v2,
-# kernels/chunker.py). Greedy packing with heading resets is sequentially
-# dependent per document, which windows cannot express (prefix-sum binning
-# — the v1 spec — let chunks exceed max_tokens when a span straddled a
-# boundary). Physical shape: ONE hash shuffle on doc_id + in-partition sort,
-# then a single-pass Arrow kernel that streams state across batch
-# boundaries — same exchange count as the old window+groupBy plan.
+# stage 4 (spread path, and any ordered-spans table): chunk assembly
+# (heading-aware greedy packing — frozen spec v2, kernels/chunker.py).
+# Greedy packing with heading resets is sequentially dependent per document,
+# which windows cannot express (prefix-sum binning — the v1 spec — let
+# chunks exceed max_tokens when a span straddled a boundary). Physical
+# shape: ONE hash shuffle on doc_id + in-partition sort, then a single-pass
+# Arrow kernel that streams state across batch boundaries. The narrow path
+# needs none of this: its kernel already holds each whole document and runs
+# the same ChunkPacker in place.
 # --------------------------------------------------------------------------
 _CHUNK_SCHEMA = (
     "doc_id string, chunk_index int, text string, page_num int, n_tokens int"
@@ -359,7 +386,12 @@ def chunk_spans(extracted: DataFrame, max_tokens: int = MAX_TOKENS) -> DataFrame
         "doc_id", "order"
     )
     kernel = partial(_chunk_kernel, max_tokens=max_tokens)
-    return clustered.mapInPandas(kernel, schema=_CHUNK_SCHEMA).withColumn(
+    return _with_chunk_id(clustered.mapInPandas(kernel, schema=_CHUNK_SCHEMA))
+
+
+def _with_chunk_id(chunks: DataFrame) -> DataFrame:
+    """Append id = md5('{doc_id}_{chunk_index}_{text}') (reference recipe)."""
+    return chunks.withColumn(
         "id",
         F.md5(F.concat_ws("_", F.col("doc_id"), F.col("chunk_index"), F.col("text"))),
     )
@@ -464,6 +496,22 @@ def resume_filter(
 # --------------------------------------------------------------------------
 # end-to-end
 # --------------------------------------------------------------------------
+class Extraction(tuple):
+    """run_extraction's result: unpacks as (extracted_spans, chunks,
+    lineage). ``unpersist()`` releases the kernel output that
+    ``persist_blocks=True`` cached; call it once the last output is written
+    (a no-op otherwise)."""
+
+    def __new__(cls, extracted, chunks, lineage, cached=None):
+        self = super().__new__(cls, (extracted, chunks, lineage))
+        self._cached = cached
+        return self
+
+    def unpersist(self) -> None:
+        if self._cached is not None:
+            self._cached.unpersist()
+
+
 def run_extraction(
     docs: DataFrame,
     run_id: str = "run0",
@@ -473,23 +521,29 @@ def run_extraction(
     mode: str = "narrow",
     run_ts=None,
     salt: str = "roundrobin",
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+) -> Extraction:
     """Full pipeline → (extracted_spans, chunks, lineage).
 
     Modes (both produce IDENTICAL output — tested):
-    * ``narrow`` (default): whole-document kernel, ordering in-kernel,
-      ZERO shuffles for extraction+lineage. Extraction is embarrassingly
-      parallel per document; at 100 TB the shuffle the spread path pays on
-      every raw payload byte is the bottleneck, so narrow is the default.
+    * ``narrow`` (default): whole-document kernel, ordering AND chunking
+      in-kernel, ZERO shuffles for all three outputs — each is a filter
+      (plus a projection) of the one kernel output. Extraction is
+      embarrassingly parallel per document; at 100 TB the shuffle the
+      spread path pays on every raw payload byte is the bottleneck, so
+      narrow is the default.
     * ``spread``: explode(spans) → optional round-robin ``repartition_to``
-      → per-span kernel → window re-ordering. Use when giant documents
+      → per-span kernel → window re-ordering → chunk_spans (one doc_id
+      shuffle + a second Python pass). Use when giant documents
       (10^2-10^3× median) would straggle a narrow task — the north-rule
       skew defuse: one doc's spans spread over many tasks.
 
     ``persist_blocks=True`` caches the kernel output (MEMORY_AND_DISK) —
-    use it when materializing more than one of the three outputs in the
-    same job batch (e.g. the streaming sink), since extracted/lineage would
-    otherwise each re-run the extraction kernel.
+    use it when materializing more than one output in the same job batch
+    (extract_job's four tables, the streaming sink), since each output
+    would otherwise re-run the extraction kernel; in narrow mode that one
+    cached pass then serves spans, chunks, lineage and anything derived
+    from them (doc_metadata). Release it with ``Extraction.unpersist()``
+    after the last write.
 
     * ``auto``: probe the per-doc span-count distribution and pick for you
       (choose_extraction_mode) — spread only when a giant-document
@@ -501,6 +555,7 @@ def run_extraction(
       single task; the skew demo measures 2.1× on a mild version).
     """
     todo = resume_filter(docs, prior_lineage)
+    cached = None
     if mode == "auto":
         mode = choose_extraction_mode(todo)
     if mode == "narrow":
@@ -512,11 +567,16 @@ def run_extraction(
         if persist_blocks:
             from pyspark import StorageLevel
 
-            raw = raw.persist(StorageLevel.MEMORY_AND_DISK)
-        extracted = raw.filter(F.col("kind") != "__doc").select(
+            raw = cached = raw.persist(StorageLevel.MEMORY_AND_DISK)
+        row_type = F.col("row_type")
+        extracted = raw.filter(row_type == SPAN_ROW).select(
             "doc_id", "order", "kind", "text", "media_ref", "page_num"
         )
-        lineage = raw.filter(F.col("kind") == "__doc").select(
+        chunks = _with_chunk_id(raw.filter(row_type == CHUNK_ROW).select(
+            "doc_id", F.col("order").alias("chunk_index"), "text", "page_num",
+            "n_tokens",
+        ))
+        lineage = raw.filter(row_type == DOC_ROW).select(
             F.lit(run_id).alias("run_id"),
             "partition_id",
             "doc_id",
@@ -535,13 +595,13 @@ def run_extraction(
         if persist_blocks:
             from pyspark import StorageLevel
 
-            blocks = blocks.persist(StorageLevel.MEMORY_AND_DISK)
+            blocks = cached = blocks.persist(StorageLevel.MEMORY_AND_DISK)
         extracted = order_spans(blocks)
         lineage = lineage_from_blocks(blocks, run_id, run_ts=run_ts)
+        chunks = chunk_spans(extracted)
     else:
         raise ValueError(f"unknown mode {mode!r} (narrow|spread|auto)")
-    chunks = chunk_spans(extracted)
-    return extracted, chunks, lineage
+    return Extraction(extracted, chunks, lineage, cached)
 
 
 # auto-mode decision thresholds: spread pays a shuffle on every payload

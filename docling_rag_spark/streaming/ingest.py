@@ -58,17 +58,23 @@ def stream_ingest(
         if _has_parquet_files(lineage_dir):  # not the _SUCCESS marker: a
             # partially-committed lineage dir must still drive the anti-join
             prior = spark.read.parquet(lineage_dir)
-        extracted, chunks, lineage = run_extraction(
+        result = run_extraction(
             batch_df.dropDuplicates(["doc_id"]),
             run_id=f"{run_id}-b{batch_id}",
             prior_lineage=prior,
             persist_blocks=True,
         )
+        extracted, chunks, lineage = result
         # idempotent (keyed anti-join) appends — a foreachBatch replay after
         # a mid-batch failure must not duplicate already-written rows
-        idempotent_append(spark, extracted, spans_dir, key=["doc_id", "order"])
-        idempotent_append(spark, chunks, chunks_dir, key="id")
-        idempotent_append(spark, lineage, lineage_dir, key=["doc_id", "status"])
+        try:
+            idempotent_append(spark, extracted, spans_dir, key=["doc_id", "order"])
+            idempotent_append(spark, chunks, chunks_dir, key="id")
+            idempotent_append(spark, lineage, lineage_dir, key=["doc_id", "status"])
+        finally:
+            # one cached kernel output per micro-batch: release it, or a
+            # long-running stream accumulates them for the whole session
+            result.unpersist()
 
     q = (
         stream.writeStream.foreachBatch(process_batch)

@@ -134,7 +134,7 @@ def main() -> None:
                 delete_docs(spark, os.path.join(args.output, sub), redo_ids)
     from datetime import datetime, timezone
 
-    extracted, chunks, lineage = run_extraction(
+    result = run_extraction(
         todo,
         run_id=run_id,
         mode=args.mode,
@@ -144,6 +144,7 @@ def main() -> None:
         # job must still trip the E17 predicate on the next run
         run_ts=datetime.now(timezone.utc),
     )
+    extracted, chunks, lineage = result
     # Exactly-once across crashes: every output is an idempotent keyed
     # append, and the lineage COMMIT is written LAST — a job killed between
     # an output write and the lineage write re-processes those docs on
@@ -152,29 +153,41 @@ def main() -> None:
     # NOTHING, src/storage/postgres.py:104-106).
     from docling_rag_spark.sources.sinks import idempotent_append
 
-    idempotent_append(
-        spark, extracted, os.path.join(args.output, "extracted_spans"),
-        key=["doc_id", "order"],
-    )
-    if args.embed:
-        from docling_rag_spark.operators.embed import embed_chunks
+    try:
+        idempotent_append(
+            spark, extracted, os.path.join(args.output, "extracted_spans"),
+            key=["doc_id", "order"],
+        )
+        if args.embed:
+            from docling_rag_spark.operators.embed import embed_chunks
 
-        chunks = embed_chunks(chunks)
-    idempotent_append(spark, chunks, os.path.join(args.output, "chunks"), key="id")
-    meta = doc_metadata(todo, extracted, chunks)
-    idempotent_append(
-        spark, meta, os.path.join(args.output, "doc_metadata"), key="doc_id"
-    )
-    idempotent_append(spark, lineage, lineage_dir, key=["run_id", "doc_id"])
+            chunks = embed_chunks(chunks)
+        idempotent_append(spark, chunks, os.path.join(args.output, "chunks"), key="id")
+        meta = doc_metadata(todo, extracted, chunks)
+        idempotent_append(
+            spark, meta, os.path.join(args.output, "doc_metadata"), key="doc_id"
+        )
+        idempotent_append(spark, lineage, lineage_dir, key=["run_id", "doc_id"])
+    finally:
+        result.unpersist()
     marker_remove(pending_marker)  # replacement fully committed
 
-    n = lineage.sparkSession.read.parquet(lineage_dir)
     from pyspark.sql import functions as F
 
-    stats = {r["status"]: r["count"] for r in n.groupBy("status").count().collect()}
-    # this-run count from the lineage that was just appended (cumulative
-    # totals alone can't show that a --resume run processed 0 new docs)
-    this_run = n.filter(F.col("run_id") == run_id).count()
+    # one aggregate over the committed lineage: cumulative totals per status
+    # and this run's count (totals alone can't show that a --resume run
+    # processed 0 new docs)
+    rows = (
+        spark.read.parquet(lineage_dir)
+        .groupBy("status")
+        .agg(
+            F.count("*").alias("count"),
+            F.count(F.when(F.col("run_id") == run_id, True)).alias("this_run"),
+        )
+        .collect()
+    )
+    stats = {r["status"]: r["count"] for r in rows}
+    this_run = sum(r["this_run"] for r in rows)
     print(
         f"extract_job done run_id={run_id} docs_this_run={this_run} "
         f"lineage_total={stats}"

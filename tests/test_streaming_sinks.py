@@ -19,9 +19,10 @@ def _write_batch(spark, path, ids):
     df.coalesce(1).write.mode("append").parquet(path)
 
 
-def test_stream_ingest_exactly_once(spark, tmp_path):
+def test_stream_ingest_exactly_once(spark, tmp_path, cached_relations):
     inp = str(tmp_path / "in")
     out = str(tmp_path / "out")
+    cached_before = cached_relations()
     _write_batch(spark, inp, [f"s{i}" for i in range(4)])
     stream_ingest(spark, inp, out)
     chunks1 = spark.read.parquet(os.path.join(out, "chunks"))
@@ -40,6 +41,8 @@ def test_stream_ingest_exactly_once(spark, tmp_path):
     assert docs2 == {f"s{i}" for i in range(6)}
     # no duplicate chunk ids
     assert chunks2.count() == chunks2.select("id").distinct().count()
+    # every micro-batch released its persisted kernel output
+    assert cached_relations() == cached_before
 
 
 def test_idempotent_append(spark, tmp_path):

@@ -14,18 +14,25 @@ sys.path.insert(0, str(REPO))
 
 COMMENT = {
     "extract_narrow": (
-        "Narrow extraction: scan → single mapInPandas (ArrowEvalPython-free, "
-        "MapInPandas node), NO Exchange anywhere — extraction+lineage are "
-        "shuffle-free. The only wider stages in the full job are the chunker "
-        "groupBy/window downstream."
+        "Narrow extraction: scan → single mapInPandas (MapInPandas node) "
+        "that extracts, orders AND chunks each whole document, emitting "
+        "span, chunk and lineage rows tagged by an out-of-band row_type "
+        "column. NO Exchange anywhere."
+    ),
+    "chunks_narrow": (
+        "Narrow chunks (run_extraction's default mode): a row_type filter "
+        "and the codegen md5 id Project over the extraction kernel's own "
+        "output — no Exchange, no Sort, no second MapInPandas. extract_job "
+        "persists that kernel output, so spans, chunks, doc_metadata and "
+        "lineage all read one cached pass."
     ),
     "chunk_spans": (
-        "Chunker (spec v2): the chunkable-kind/text filter sits under ONE "
-        "hash Exchange on doc_id + in-partition Sort, then a single "
-        "MapInPandas packer (greedy+heading state streams across Arrow "
-        "batches); the md5 id stays a codegen Project above it. Same "
-        "exchange count as the old window+groupBy plan, with true greedy "
-        "semantics windows cannot express."
+        "chunk_spans over an ordered-spans table (the spread path's "
+        "chunker; here fed the narrow extracted spans): the chunkable-kind/"
+        "text filter sits under ONE hash Exchange on doc_id + in-partition "
+        "Sort, then a single MapInPandas packer (greedy+heading state "
+        "streams across Arrow batches); the md5 id stays a codegen Project "
+        "above it."
     ),
     "knn_bruteforce": (
         "Vector top-k: TakeOrderedAndProject = distributed partial top-k per "
@@ -132,7 +139,8 @@ def main() -> None:
     plans = {}
     plans["extract_narrow"] = extract_documents_narrow(corpus)
     extracted, chunks, lineage = run_extraction(corpus, run_id="plans")
-    plans["chunk_spans"] = chunks
+    plans["chunks_narrow"] = chunks
+    plans["chunk_spans"] = chunk_spans(extracted)
     plans["knn_bruteforce"] = knn_bruteforce(spark, sf)
     plans["pricing_summary"] = pricing_summary(spark, sf)
     plans["revenue_by_nation"] = revenue_by_nation(spark, sf)
@@ -179,6 +187,10 @@ def main() -> None:
                 if any(k in l for k in ("PushedFilters", "ReadSchema", "Location")) ]
         out += [f"## {name}", "", COMMENT.get(name, ""), "", "```",
                 tree.strip()[:4000], *(keep[:8]), "```", ""]
+    # sections this tool does not generate (hand-written captures) are kept,
+    # in their order, after the generated ones
+    old = (REPO / "PLANS.md").read_text().split("\n## ")[1:]
+    out += [f"## {sec}" for sec in old if sec.split("\n", 1)[0] not in plans]
     (REPO / "PLANS.md").write_text("\n".join(out))
     print("wrote PLANS.md")
     spark.stop()
